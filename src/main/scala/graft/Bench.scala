@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark. Prints ONE compact JSON line (the driver's
   * tail capture is 2000 chars — the line must stay well under that,
@@ -159,14 +158,7 @@ object Bench {
     // up, so the end-of-run loadavg alone can't show the gate passed
     val loadAtGate = loadavg
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runtime.session(cpus.toInt)
 
     val qs = SparkEntry.queries
     // dev filter: SPARK_GRAFT_BENCH_ONLY=a,b restricts the set

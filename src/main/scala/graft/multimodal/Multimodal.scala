@@ -687,7 +687,7 @@ object Multimodal {
     * mid-range (~32 of 64 bits set), so the decoded average-hash IS the
     * painted word: within-class ahash distance is EXACTLY `flips`, and
     * cross-class distance is the distance between splitmix words
-    * (pairwise >= 10 even after +/-3 flips; AhashProbe pins it). */
+    * (pairwise >= 10 even after +/-3 flips; `Probe growth ahash` checks it). */
   private def cellImageFor(cls: Int, flips: Int): java.awt.image.BufferedImage = {
     val bits = splitmix64(cls + 1L)
     val flipped = (0 until flips).map(j => (cls * 7 + j * 13) % 64).toSet

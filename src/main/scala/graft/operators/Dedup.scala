@@ -341,7 +341,7 @@ object Dedup {
   // the SHARD only. Candidate signatures come back via a second
   // broadcast semi-join on the same persisted table, so total arrival
   // cost = shard-sized compute + two scan-only passes over the index
-  // (IncrementalDedupProbe measures the decade growth).
+  // (`Probe growth incdedup` measures the decade growth).
 
   /** Build (or rebuild) the persisted MinHash signature index for an
     * accepted corpus: one parquet table (id, mh array<long>[k]). Band
@@ -1272,21 +1272,23 @@ object Dedup {
       .repartition(col("__t")) // hook joins reuse this partitioning
       .persist()
     try {
-    // Round structure (r10 optimization — the label table is small, so
-    // each MATERIALIZATION costs a whole Spark job; the round fusions
-    // below halve the job count of the realistic diameter-1..3 graphs
-    // with verdicts unchanged, CcSpec/probes pinned):
+    // Round structure. The label table is small, so each
+    // materialization costs a whole Spark job; rounds are shaped to
+    // keep the job count low on the realistic diameter-1..3 graphs:
     //  - init+hook fused: identity labels make the first hook's
     //    neighbor labels just the neighbor IDS, so round 1 is one
-    //    aggregation over the edge list — no separate identity-label
-    //    materialization, no join;
-    //  - hook+jump fused: each round materializes hook + ONE
-    //    pointer-doubling jump in a single job (two observe() metrics
-    //    on one plan; the label-sized hook subtree evaluates twice
-    //    inside the job — cheaper than a second job). Deeper forests
-    //    keep jumping in plain follow-up passes, so the O(log d)
-    //    convergence bound is unchanged.
-    // Changed-counts ride the SAME job via observe() — a separate
+    //    aggregation over the edge list, with no separate
+    //    identity-label materialization and no join;
+    //  - materialize, then jump: each round checkpoints the hooked
+    //    labels, then runs pointer-doubling jumps over the checkpoint
+    //    until one changes nothing. The jump's self-join therefore
+    //    reads a materialized table, never the hook's edge-sized
+    //    subtree. This won over the fused variant (hook + one jump in
+    //    a single job, the hook subtree evaluated on both join
+    //    branches): round 11's bench measured
+    //    `multimodal_neardup_pipeline` at 3.38 s fused against 1.64 s
+    //    materialized.
+    // Changed-counts ride the SAME job via observe(): a separate
     // count() per pass doubled the job count at the 10M-edge probe.
     def jumpOf(hooked: DataFrame, obs: org.apache.spark.sql.Observation)
         : DataFrame =
@@ -1294,12 +1296,6 @@ object Dedup {
       // labeled id (labels start as ids and evolve by min over label
       // values), so the self-join is total; a depth-1 forest converges
       // with one no-change jump.
-      // NOTE on metrics across the duplicated subtree: `hooked` carries
-      // its caller's CollectMetrics node, and the self-join below makes
-      // that subtree appear on BOTH join branches. The metric is safe
-      // ONLY because it is consumed as a zero/non-zero convergence
-      // signal — each CollectMetricsExec instance still sees the full
-      // row stream — never as a magnitude.
       hooked.as("l")
         .join(hooked.select(col("id").as("__jid"), col("comp").as("__jc")),
           col("comp") === col("__jid"))
@@ -1336,30 +1332,13 @@ object Dedup {
             .select(col("id"), col("comp").as("__old"),
               least(col("comp"), coalesce(col("__nc"), col("comp"))).as("comp"))
         }
-      // observe on ONE branch only — the same CollectMetrics node on
-      // both sides of the self-join would be a duplicate-metric error
+      // the changed-count rides the checkpoint job below
       val hooked = hooked0.observe(hookObs,
         coalesce(sum(when(col("comp") < col("__old"), 1L).otherwise(0L)),
           lit(0L)).as("changed"))
         .select(col("id"), col("comp"))
-      // BISECT TOGGLE: materialize-then-jump (r9 shape)
       labels = Lineage.truncate(hooked)
-      val jumped = jumpOf(labels, jumpObs)
-      labels = Lineage.truncate(jumped)
-      // evidence hook (set session conf graft.cc.plandump to a file
-      // path): the fused hook+jump round's EXECUTED plan — this is how
-      // the exchange-reuse claim below is demonstrated (the subtree is
-      // otherwise invisible behind the eager checkpoint). Scale safety
-      // of the fusion rests on the hook aggregation's exchange being
-      // consumed as a ReusedExchange/stage-cache hit on the second join
-      // branch, so the edge-sized part of the hook runs once per round.
-      if (it == 0)
-        pairs.sparkSession.conf.getOption("graft.cc.plandump").foreach { f =>
-          val w = new java.io.PrintWriter(f)
-          try w.write(jumped.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          finally w.close()
-        }
+      labels = Lineage.truncate(jumpOf(labels, jumpObs))
       hookChanged = changedMetric(hookObs)
       var jumping = changedMetric(jumpObs) > 0
       while (jumping) {

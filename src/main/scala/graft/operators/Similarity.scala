@@ -141,7 +141,7 @@ object Similarity {
     * BROADCAST-join the corpus on the cell id — the corpus is never
     * shuffled, and only ~nprobe/ncentroids of it reaches the re-rank.
     *
-    * Default operating point (SimilarityScaleProbe, 200k synthetic
+    * Default operating point (`Probe growth similarity`, 200k synthetic
     * 64-dim vectors, recall@10 vs brute force): nprobe 2 → 0.58,
     * nprobe 4 → 0.75, nprobe 6 → 0.81, at ~¼–⅓ the brute-force wall.
     * IVF is the general mid-similarity ANN path; [[lshTopK]]'s

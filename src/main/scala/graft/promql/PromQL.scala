@@ -48,7 +48,7 @@ object PromQL {
 
   /** At or above this window/step ratio, range/instant evaluation uses
     * the deque fold ([[foldWindowsAtGrid]]) instead of the grid explode.
-    * PromqlScaleProbe measured the fold faster at EVERY ratio — 2× wall
+    * `Probe growth promql` measured the fold faster at EVERY ratio — 2× wall
     * and 3-6× less shuffle at ratios 1-3 on sf0.1, growing to 15.7×
     * wall and 77× shuffle at ratio 240 on 10× events — so the fold is
     * the default path (threshold 1); gridExplode remains for ratio-0

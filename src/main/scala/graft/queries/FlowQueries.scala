@@ -21,7 +21,7 @@ object FlowQueries {
 
   /** Watermark-clock document for the streaming-curation entry: a row
     * that must PASS the Gopher filter (a filtered row never reaches the
-    * EventTimeWatermark collector — CurationStreamProbe) — 54 varied
+    * EventTimeWatermark collector) — 54 varied
     * words, 6 distinct required stop words, no repeated grams, all
     * alphabetic. The oracle embeds the same literal and derives its
     * token count by the same split, so nothing is hand-counted. */
@@ -180,7 +180,7 @@ object FlowQueries {
       // APPEND-MODE WINDOWED AGGREGATION through the real streaming
       // engine: five micro-batches, 10-minute tumbling count with a
       // 10-minute watermark, pinning Spark's TWO-LAGGED watermark
-      // design (probed in tools/WmAggProbe): during batch N the
+      // design: during batch N the
       // EVICTION watermark is computed from data through batch N-1
       // (a window emits in the first batch whose eviction watermark
       // reaches its end), while the LATE-EVENT filter uses the
@@ -254,7 +254,7 @@ object FlowQueries {
       // actually deploys, through the REAL engine in one query:
       // watermark → Gopher quality filter → keyed dedup with state
       // expiry → windowed per-source stats, append sink. Two stateful
-      // operators chained; semantics pinned by CurationStreamProbe:
+      // operators chained; semantics pinned by this fixture:
       //  - a row the quality filter drops does NOT advance the
       //    watermark (Catalyst pushes the filter below the
       //    EventTimeWatermark node) — so the watermark clocks are

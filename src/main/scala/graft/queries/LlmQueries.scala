@@ -591,9 +591,9 @@ object LlmQueries {
       // base PNG / lossy JPEG re-encode (ahash collides exactly — the
       // exact-key stage absorbs it) / 1-3-cell-flipped PNGs (ahash
       // Hamming exactly 1..3 — the banded pair join catches them);
-      // cross-class distance >= 21 (AhashProbe), so the generator
+      // cross-class distance >= 21 (`Probe growth ahash`), so the generator
       // arithmetic IS the ground truth: every variant of class c lands
-      // in c's component. Body shared with NearDupScaleProbe (the
+      // in c's component. Body shared with `Probe growth neardup` (the
       // decade growth audit).
       nearDupPipeline(Multimodal.nearDupImageAssets(s,
         T(s, d, "events").filter(col("event_id") < 3000)))
@@ -639,7 +639,7 @@ object LlmQueries {
     * never reaches banding), the banded ahash Hamming join relates only
     * DISTINCT perceptual keys, generic CC stitches (star + Hamming
     * pairs aren't a star forest). Shared by the
-    * `multimodal_neardup_pipeline` entry and NearDupScaleProbe. */
+    * `multimodal_neardup_pipeline` entry and `Probe growth neardup`. */
   def nearDupPipeline(assets: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val keyed = graft.operators.Lineage.truncate(
       Multimodal.contentKeys(assets))

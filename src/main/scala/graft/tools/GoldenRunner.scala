@@ -762,13 +762,14 @@ object GoldenSweep {
     // views / function registry, shared context). Sequential: ~19 min;
     // 4 shards: under 8 — the per-commit-gate budget (r5 task #8).
     val shards = sys.env.get("GOLDEN_SHARDS").map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[${math.max(8, shards * 8)}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Runtime.session(math.max(8, shards * 8))
     spark.sparkContext.setLogLevel("ERROR")
+    // each file's plans run on 8 shuffle partitions, whatever the core count
+    def shardSession(): SparkSession = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", "8")
+      s
+    }
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
     // recurse: the corpus nests files (common/types/float/*.result,
@@ -832,13 +833,14 @@ object GoldenSweep {
       .map(_._2.map(_._1))
     val threads = groups.map { g =>
       val t = new Thread(() => {
-        val session = spark.newSession()
+        val session = shardSession()
         g.foreach { case (rel, path) => process(session, rel, path) }
       })
       t.start(); t
     }
     threads.foreach(_.join())
-    seqEntries.foreach { case (rel, path) => process(spark, rel, path) }
+    val seqSession = shardSession()
+    seqEntries.foreach { case (rel, path) => process(seqSession, rel, path) }
     println(s"[TOTAL] files ok=$nOk fail=$nFail compared=$nCompared " +
       s"skipped=$nSkipped errs=$nErrs")
     spark.stop()

@@ -2,21 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{Catalog, MergeMode, TableSpec}
 import graft.sources.Copy
 import graft.sources.Copy.Options
 
-class CopySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CopySpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
   private def data = Seq(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{PiiFunctions, TextRepetition}
@@ -8,13 +8,7 @@ import graft.operators.{Clustering, TfIdf}
 
 /** Hand-computed fixtures for the corpus-curation operators
   * (repetition filters, PII redaction, TF-IDF, quantized k-means). */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
   private def rep(text: String): Map[String, Any] = {

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.GoldenRunner
 
 /** Golden-corpus runner over the reference's RANGE sqlness files —
   * see graft.tools.GoldenRunner for the comparison contract. */
-class GoldenRangeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenRangeSpec extends AnyFunSuite with SparkTest {
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common/range"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.GoldenRunner
@@ -9,14 +8,7 @@ import graft.tools.GoldenRunner
   * conformance push (TQL CTEs, approx aggregates, anomaly windows,
   * pg_catalog/info-schema emulation, scheduled flows, identifier
   * edge cases) so regressions surface in `sbt test`, not the sweep. */
-class GoldenRound3Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenRound3Spec extends AnyFunSuite with SparkTest {
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.GoldenRunner
@@ -12,14 +11,7 @@ import graft.tools.GoldenRunner
   * multi-field binary operators. Pins assert BOTH a minimum compared
   * count and zero statement-exception skips, so a regression that turns
   * comparisons into exceptions can't hide in the skip column. */
-class GoldenRound4Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenRound4Spec extends AnyFunSuite with SparkTest {
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.GoldenRunner
@@ -14,14 +13,7 @@ import graft.tools.GoldenRunner
   * and local_file_access (CREATE EXTERNAL TABLE + COPY path traversal
   * guard). Each pin gates a minimum compared count and zero statement
   * exceptions. */
-class GoldenRound4bSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenRound4bSpec extends AnyFunSuite with SparkTest {
 
   private val Cases = "/root/reference/tests/cases"
 

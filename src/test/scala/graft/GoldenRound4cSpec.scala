@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.GoldenRunner
@@ -16,14 +15,7 @@ import graft.tools.GoldenRunner
   * RANGE-in-CTE form, metric-region row retention, and the PromQL
   * offset/subquery/histogram tails. Each pin gates a minimum compared
   * count and zero statement exceptions. */
-class GoldenRound4cSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenRound4cSpec extends AnyFunSuite with SparkTest {
 
   private val Common = "/root/reference/tests/cases/standalone/common"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.GoldenRunner
@@ -15,14 +14,7 @@ import graft.tools.GoldenRunner
   * the low-fan-out explode results stay byte-identical), and
   * aggregate/approx_percentile_cont. Asserts a minimum compared count
   * and zero exception skips per file. */
-class GoldenRound6Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenRound6Spec extends AnyFunSuite with SparkTest {
 
   private val CorpusDir = "/root/reference/tests/cases/standalone/common"
 

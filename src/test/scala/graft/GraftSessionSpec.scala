@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sql.GraftSession
 
-class GraftSessionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftSessionSpec extends AnyFunSuite with SparkTest {
 
   lazy val g = new GraftSession(spark)
 
@@ -52,6 +44,9 @@ class GraftSessionSpec extends AnyFunSuite {
       "SELECT * FROM logs WHERE matches_term(msg, 'dup')")
     val n = g.sql("SELECT * FROM logs WHERE msg @@ 'dup'").count()
     assert(n == 2)
+    // @@ in the select list, aliased
+    val hits = g.sql("SELECT msg @@ 'dup' AS `matches_dup` FROM logs").collect()
+    assert(hits.map(_.getBoolean(0)).toSeq == Seq(true, true))
   }
 
   test("create flow + admin flush_flow refresh the sink") {

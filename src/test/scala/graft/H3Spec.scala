@@ -34,27 +34,36 @@ class H3Spec extends AnyFunSuite {
     assert(kids.length === 49)
     assert(kids.head === 622203769691602943L)
     assert(kids.last === 622203769693372415L)
+    assert(H3.childrenSize(cell8, 10) === 49L)
     assert(H3.cellToChildPos(cell8, 6) === 45L)
     assert(H3.childPosToCell(25, cell8, 11) === 626707369319059455L)
   }
 
   test("grid disk matches the reference spiral ordering") {
     assert(H3.gridDisk(cell8, 0).toSeq === Seq(cell8))
-    val disk = H3.gridDisk(cell8, 3)
-    assert(disk.length === 37)
-    assert(disk.head === cell8)
-    assert(disk(1) === 613196570436829183L)
-    assert(disk.last === 613196570216628223L)
+    assert(H3.gridDisk(cell8, 3).toSeq === Seq(613196570438926335L,
+      613196570436829183L, 613196569755254783L, 613196570378108927L,
+      613196570373914623L, 613196570434732031L, 613196570432634879L,
+      613196570445217791L, 613196570250182655L, 613196569753157631L,
+      613196569744769023L, 613196569746866175L, 613196570369720319L,
+      613196570365526015L, 613196570376011775L, 613196570336165887L,
+      613196570344554495L, 613196570443120639L, 613196570441023487L,
+      613196570220822527L, 613196570258571263L, 613196570248085503L,
+      613196570254376959L, 613196569757351935L, 613196569748963327L,
+      613196569751060479L, 613196569686048767L, 613196569688145919L,
+      613196570371817471L, 613196570367623167L, 613196570394886143L,
+      613196570338263039L, 613196570331971583L, 613196570340360191L,
+      613196570405371903L, 613196570403274751L, 613196570216628223L))
   }
 
   test("grid distance, path, and metric distances") {
     val c1 = H3.stringToCell("86283082fffffff")
     val c2 = H3.stringToCell("86283470fffffff")
     assert(H3.gridDistance(c1, c2) === 9)
-    val path = H3.gridPathCells(c1, c2)
-    assert(path.length === 10)
-    assert(path.head === c1 && path.last === c2)
-    assert(path(4) === 604189638034194431L)
+    assert(H3.gridPathCells(c1, c2).toSeq === Seq(604189371209351167L,
+      604189371075133439L, 604189375235883007L, 604189375101665279L,
+      604189638034194431L, 604189638571065343L, 604189638436847615L,
+      604189642597597183L, 604189642463379455L, 604189641255419903L))
     assert(math.rint(H3.distanceSphereKm(c1, c2) * 1e5) / 1e5 === 55.05017)
     assert(math.abs(H3.distanceDegree(c1, c2) - 0.54939243697098) < 1e-12)
   }

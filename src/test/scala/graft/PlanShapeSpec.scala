@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression gate for the headline bench queries — pins the
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (tests/cases/standalone/optimizer/filter_push_down.sql): the same
   * properties — pushdown, broadcast choice, top-k pruning — asserted
   * structurally on Spark's formatted physical plan. */
-class PlanShapeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanShapeSpec extends AnyFunSuite with SparkTest {
 
   private val dir = "/root/testdata/sf0.001"
 

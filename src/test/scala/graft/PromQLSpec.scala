@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.promql._
@@ -8,14 +8,7 @@ import graft.promql.PromQL.{EvalParams, Metric}
 
 import scala.jdk.CollectionConverters._
 
-class PromQLSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PromQLSpec extends AnyFunSuite with SparkTest {
 
   private def mkDf(rows: Seq[(Double, Long, String)]): DataFrame =
     spark.createDataFrame(

@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{OtlpMetrics, Protocols, PromRemoteWrite, ProtoWire}
 
-class ProtocolsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProtocolsSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
   test("influx line protocol: tags, typed fields, escapes, timestamps") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.RangeSelect
@@ -9,14 +9,7 @@ import graft.operators.RangeSelect.{Fill, RangeAgg}
 /** Golden tests replicating the reference's sqlness fixtures
   * tests/cases/standalone/common/range/{calculate,fill}.result —
   * the host table (ts ms, host tag, val bigint with null gaps). */
-class RangeSelectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeSelectSpec extends AnyFunSuite with SparkTest {
 
   import scala.jdk.CollectionConverters._
   private def host(): DataFrame = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextAnalysis
@@ -9,13 +8,7 @@ import graft.functions.TextAnalysis
   * field-for-field against the original per-stat Column formulations —
   * on adversarial edge cases AND the real sf0.001 corpus. The
   * text_stats oracle re-pins the same values cross-engine. */
-class TextAnalysisSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextAnalysisSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
   private def compare(df: org.apache.spark.sql.DataFrame): Unit = {
