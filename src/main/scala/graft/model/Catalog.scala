@@ -96,18 +96,35 @@ object Catalog {
       ""
     }
 
-  /** Pre-seed the schema cache after an append that PROVABLY kept the
-    * schema (INSERT writes columns aligned to the full target schema,
-    * so the merged schema of the new listing equals the merged schema
-    * read before the write) — optimization round 11. Without this,
-    * every INSERT invalidates the cache by design and the next
-    * statement pays a fresh footer-union job; at 100 TB that job scans
-    * every file footer in the table to rediscover a schema the writer
-    * already knew. */
-  def primeSchemaCacheAfterAppend(spark: SparkSession, path: String,
+  /** Pre-seed the schema cache with a schema the writer already knows.
+    * INSERT appends columns aligned to the full target schema, so the
+    * merged schema of the grown listing is the one read before the
+    * write; a flow refresh rewrites its sink with one known schema
+    * ([[readBackSchema]] of the written frame). Without this, every
+    * write invalidates the cache by design and the next statement pays
+    * a fresh footer-union job; at 100 TB that job scans every file
+    * footer in the table to rediscover a schema the writer already
+    * knew. Call it after the write, once the listing is final. */
+  def primeSchemaCache(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val sig = listingSig(spark, path)
     if (sig.nonEmpty) mergedSchemaCache.put((path, sig), schema): Unit
+  }
+
+  /** The schema a Parquet read returns for files written from a frame
+    * of schema `written`: file sources write every field nullable. */
+  def readBackSchema(written: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    nullable(written).asInstanceOf[StructType]
   }
 
   def rawRead(spark: SparkSession, path: String): DataFrame = {

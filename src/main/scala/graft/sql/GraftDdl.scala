@@ -2,6 +2,8 @@ package graft.sql
 
 import java.util.Locale
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1312,7 +1314,7 @@ private[sql] trait GraftDdl { self: GraftSession =>
     * concurrent readers at cluster scale. */
   private[graft] def refreshPath(path: String): Unit =
     try spark.catalog.refreshByPath(path)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
   /** One-off physical rewrite of a table's Parquet (type migration /
     * dropped-column purge). DDL-time only — reads stay lazy; the

@@ -2,6 +2,8 @@ package graft.sql
 
 import java.util.Locale
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -138,7 +140,7 @@ private[sql] trait GraftFlowTql { self: GraftSession =>
             last += ivMs
             flowLastTickMs.put(f, last)
             try refreshFlow(f, Some(last)) catch {
-              case e: Throwable => System.err.println(
+              case NonFatal(e) => System.err.println(
                 s"[flow-tick] $f: ${String.valueOf(e.getMessage).take(160)}")
             }
           }

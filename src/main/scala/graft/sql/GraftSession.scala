@@ -2,6 +2,8 @@ package graft.sql
 
 import java.util.Locale
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -752,17 +754,20 @@ final class GraftSession(spark0: SparkSession,
     catalog.createView(spec.name)
   }
 
-  def refreshFlow(name: String, pinnedMs: Option[Long] = None): Unit = {
+  /** One batching-flow refresh: ADMIN flush_flow, a scheduled tick, or
+    * an INSERT into a scheduled flow's source. Returns the rows it wrote
+    * to the sink, counted by the write job (0 when nothing evaluated). */
+  def refreshFlow(name: String, pinnedMs: Option[Long] = None): Long = {
     val (flowDef, query) = flows.getOrElse(name,
       throw new IllegalArgumentException(s"unknown flow: $name"))
     flowMeta.get(name) match {
-      case Some(meta) if meta.pending => // source never appeared — no-op
+      case Some(meta) if meta.pending => 0L // source never appeared — no-op
       case Some(meta) if meta.srcTable.exists(t =>
           !catalog.tables.contains(t) ||
             tableEpoch.getOrElse(t, 0L) != meta.srcEpoch) =>
         // the source was dropped (and possibly re-created): the flow is
         // bound to the old table id and stops updating (flow_rebuild)
-        ()
+        0L
       case Some(meta) =>
         flowLastExecMs.put(name, System.currentTimeMillis())
         val spec = catalog.spec(meta.sinkTable)
@@ -770,20 +775,23 @@ final class GraftSession(spark0: SparkSession,
         // its LAST refresh (show_create_flow accumulates across evals);
         // an aggregating flow re-evaluates everything since creation
         val appendMode = meta.streaming && !aggregatingQuery(query)
-        // batching flows re-evaluate every row in the time-windows
-        // DIRTIED by writes since creation — a pre-creation row in a
-        // dirty window IS included (flow_rebuild's "4 is also expected"),
-        // while with no post-creation writes nothing evaluates at all
-        // (flow_flush's empty sink). Streaming non-aggregating flows
-        // instead append only the rows since their last refresh.
+        // batching flows re-evaluate every row of each time window that
+        // holds a source row written since creation ([[dirtyWindows]]) —
+        // a pre-creation row in a dirty window IS included (flow_rebuild's
+        // "4 is also expected"), while with no post-creation writes
+        // nothing evaluates at all (flow_flush's empty sink). Streaming
+        // non-aggregating flows instead append only the rows since their
+        // last refresh.
         if (appendMode) {
           val sinceSeq = flowLastSeq.getOrElse(name, meta.createSeq)
           meta.srcTable.foreach(s => refreshView(s, Some(sinceSeq)))
         } else meta.srcTable match {
           case Some(s) =>
-            refreshView(s, Some(meta.createSeq))
             val BinRx = ("(?i)date_bin\\s*\\(\\s*INTERVAL\\s+'([^']+)'\\s*,\\s*" +
               "([A-Za-z_][A-Za-z0-9_]*)").r
+            // an instant-ttl source's pre-creation rows were already
+            // consumed-and-dropped — only post-creation rows replay
+            val instantTtl = catalog.spec(s).ttlMillis.contains(0L)
             BinRx.findFirstMatchIn(query) match {
               case Some(mm) if spark.table(s).columns.contains(mm.group(2)) =>
                 // time-windowed flow: only windows DIRTIED by new rows
@@ -792,15 +800,9 @@ final class GraftSession(spark0: SparkSession,
                 val tsC = mm.group(2)
                 def win(c: Column) =
                   floor(unix_millis(c.cast("timestamp")) / ms)
-                val wins = spark.table(s)
-                  .select(win(col(tsC)).as("w")).distinct()
-                  .collect().map(_.getLong(0)).toSeq
-                if (wins.isEmpty) { refreshView(s); return }
-                // an instant-ttl source's pre-creation rows were already
-                // consumed-and-dropped — only post-creation rows replay
-                val seqF = if (catalog.spec(s).ttlMillis.contains(0L))
-                  Some(meta.createSeq) else None
-                refreshView(s, seqF,
+                val wins = dirtyWindows(s, tsC, win, meta.createSeq)
+                if (wins.isEmpty) { refreshView(s); return 0L }
+                refreshView(s, Some(meta.createSeq).filter(_ => instantTtl),
                   rowFilter = Some(win(col(tsC)).isin(wins: _*)))
               case _ =>
                 // no declared time window: the whole table re-evaluates
@@ -808,7 +810,7 @@ final class GraftSession(spark0: SparkSession,
                 // except an instant-ttl source, whose rows only exist
                 // for the flow between arrival and consumption
                 // (flow_advance_ttl keeps accumulating 20,22 then 23)
-                if (!catalog.spec(s).ttlMillis.contains(0L)) refreshView(s)
+                refreshView(s, Some(meta.createSeq).filter(_ => instantTtl))
             }
           case None => ()
         }
@@ -874,37 +876,60 @@ final class GraftSession(spark0: SparkSession,
                .getOrElse(lit(null).cast(f.dataType)))
              .getOrElse(lit(null)))
             .cast(f.dataType).as(f.name)): _*)
-        if (appendMode) {
-          aligned.write.mode("append").parquet(spec.path)
-          refreshPath(spec.path)
-          flowLastSeq.put(name, seqCounter.get())
-        }
-        else if (spec.mergeMode == MergeMode.LastNonNull)
-          // the sink's own merge view coalesces per column (null keeps
-          // the old value) — append and let storage-merge resolve, like
-          // the reference region write path (flow_last_non_null)
-          { aligned.write.mode("append").parquet(spec.path); refreshPath(spec.path) }
-        else if (flowDef.keys.nonEmpty)
-          Flow.upsert(aligned, spec.path, flowDef.keys)
-        else {
-          // keyless flow (global aggregate): full recompute replaces the
-          // sink — staging + rename so readers never see a partial sink
-          val fs = new org.apache.hadoop.fs.Path(spec.path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val staging = new org.apache.hadoop.fs.Path(spec.path + "__staging")
-          aligned.write.mode("overwrite").parquet(staging.toString)
-          val old = new org.apache.hadoop.fs.Path(spec.path + "__old")
-          if (fs.exists(old)) fs.delete(old, true)
-          val sinkP = new org.apache.hadoop.fs.Path(spec.path)
-          if (fs.exists(sinkP)) fs.rename(sinkP, old)
-          fs.rename(staging, sinkP)
-          fs.delete(old, true)
-        }
+        val written =
+          // a last_non_null sink's own merge view coalesces per column
+          // (null keeps the old value) — append and let storage-merge
+          // resolve, like the reference region write path
+          // (flow_last_non_null)
+          if (appendMode || spec.mergeMode == MergeMode.LastNonNull) {
+            val (toWrite, rows) = Flow.counted(aligned)
+            toWrite.write.mode("append").parquet(spec.path)
+            rows()
+          }
+          else if (flowDef.keys.nonEmpty)
+            Flow.upsert(aligned, spec.path, flowDef.keys)
+          else {
+            // keyless flow (global aggregate): full recompute replaces the
+            // sink — staging + swap so readers never see a partial sink
+            val staging = new org.apache.hadoop.fs.Path(spec.path + "__staging")
+            val (toWrite, rows) = Flow.counted(aligned)
+            toWrite.write.mode("overwrite").parquet(staging.toString)
+            Flow.swapIn(sinkFs, staging, sinkP)
+            Catalog.primeSchemaCache(spark, spec.path, Catalog.readBackSchema(aligned.schema))
+            rows()
+          }
+        if (appendMode) flowLastSeq.put(name, seqCounter.get())
         refreshPath(spec.path)
         refreshView(meta.sinkTable)
+        written
       case None =>
         Flow.refreshOnce(spark.sql(dialect(query)), flowDef.copy(transform = identity))
     }
+  }
+
+  /** The windows (`win` of column `tsC`) of `src` that hold a row
+    * written after the flow was created (seq > `createSeq`).
+    *
+    * When `tsC` is the source's time index they come from the raw rows,
+    * without planning the merge view: a raw row newer than `createSeq`
+    * has a newest version of its key (which includes the time index)
+    * with the same ts, and that version is newer than `createSeq` too,
+    * so both give the same set. DELETE rewrites the files and a
+    * duration TTL applies only at compaction, so neither leaves a raw
+    * row the view hides. Any other column — or a time index that a
+    * backfill, cast or type change rewrites in the view — is read
+    * through the view. */
+  private def dirtyWindows(src: String, tsC: String, win: Column => Column,
+      createSeq: Long): Seq[Long] = {
+    val rewritten = backfills.getOrElse(src, Vector.empty).exists(_._1 == tsC) ||
+      colCasts.getOrElse(src, Map.empty).contains(tsC) ||
+      typeHistory.getOrElse(src, Map.empty).contains(tsC)
+    val rows =
+      if (tsC == catalog.spec(src).timeIndex && !rewritten)
+        catalog.raw(src).filter(col(SeqCol) > createSeq)
+      else { refreshView(src, Some(createSeq)); spark.table(src) }
+    rows.select(win(col(tsC)).as("w")).distinct()
+      .collect().map(_.getLong(0)).toSeq
   }
 
   /** Cross-schema table references (select/multi_column_ref.sql,
@@ -1908,7 +1933,7 @@ final class GraftSession(spark0: SparkSession,
       // the append wrote columns aligned to `target`, so the merged
       // schema of the grown listing is unchanged — skip the next
       // statement's footer-union job
-      graft.model.Catalog.primeSchemaCacheAfterAppend(spark, spec.path, target)
+      graft.model.Catalog.primeSchemaCache(spark, spec.path, target)
       refreshPath(spec.path)
       refreshView(name)
       logicalParent.get(name).foreach(refreshMetricPhyView)
@@ -1919,7 +1944,7 @@ final class GraftSession(spark0: SparkSession,
       flowMeta.foreach { case (fname, m) =>
         if (m.srcTable.contains(name) && m.evalInterval.isDefined)
           try refreshFlow(fname) catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[flow-refresh] $fname: ${String.valueOf(e.getMessage).take(160)}")
           }
       }
@@ -2266,23 +2291,17 @@ final class GraftSession(spark0: SparkSession,
 
   /** ADMIN fn(...) — result is a single cell under a column named by
     * the statement itself (sqlness golden shape): FLUSH_FLOW returns
-    * the refreshed sink's row count, storage admin fns return `0`. */
+    * the rows the flush wrote to the sink (the reference's affected
+    * rows; every golden redacts the cell via SQLNESS REPLACE →
+    * ` FLOW_FLUSHED  `), storage admin fns return `0`. */
   private def admin(stmt: String): DataFrame = {
     import spark.implicits._
     val fn = stmt.stripPrefix("ADMIN").stripPrefix("admin").trim
     val cell =
       if (fn.toLowerCase(Locale.ROOT).startsWith("flush_flow")) {
-        // returns the refreshed row count like the reference (every
-        // golden redacts it via SQLNESS REPLACE → ` FLOW_FLUSHED  `,
-        // which applies to BOTH sides of the compare)
         val name = fn.substring(fn.indexOf('(') + 1, fn.lastIndexOf(')'))
           .trim.stripPrefix("'").stripSuffix("'")
-        refreshFlow(name)
-        val n = flowMeta.get(name)
-          .flatMap(m => scala.util.Try(
-            spark.table(m.sinkTable).count()).toOption)
-          .getOrElse(0L)
-        String.valueOf(n)
+        String.valueOf(refreshFlow(name))
       } else {
         // compaction materializes TTL expiry: fully-expired rows are
         // physically dropped, so a later LOOSER ttl cannot resurrect

@@ -93,6 +93,77 @@ class FlowSpec extends AnyFunSuite with SparkTest {
     assert(out == Set(("a", 0L, 9.0, "d1"), ("c", 5L, 3.0, "d1"), ("b", 0L, 2.0, "d2")))
   }
 
+  test("unpartitioned upsert = anti-join on the batch keys + union: null keys, duplicate keys, unshared columns") {
+    val sink = tmpDir("flow_upsert_sink") + "/sink"
+    val keys = Seq("host", "w")
+    val old = Seq[(String, Option[Long], Double, String)](
+      ("a", Some(0L), 1.0, "x"), ("b", Some(0L), 2.0, "y"), (null, Some(0L), 3.0, "z"),
+      ("c", None, 4.0, "q"), ("d", Some(5L), 5.0, "r")).toDF("host", "w", "v", "note")
+    assert(Flow.upsert(old, sink, keys) == 5L)
+    // a key repeated in the batch, keys with a null part (they match
+    // nothing), a sink-only column (note) and a batch-only one (extra)
+    val batch = Seq[(String, Option[Long], Double, Int)](
+      ("a", Some(0L), 10.0, 1), ("a", Some(0L), 11.0, 2), (null, Some(0L), 30.0, 3),
+      ("c", None, 40.0, 4), ("e", Some(9L), 7.0, 5)).toDF("host", "w", "v", "extra")
+    val want = old.join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .unionByName(batch, allowMissingColumns = true)
+    val wantRows = want.collect().map(_.toSeq).toSeq
+    assert(Flow.upsert(batch, sink, keys) == 5L)
+    val got = spark.read.parquet(sink)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.collect().map(_.toSeq).toSeq.sortBy(_.toString) == wantRows.sortBy(_.toString))
+    // an empty batch (pruned to an empty relation by the optimizer) still
+    // reports its count and leaves every row in place
+    assert(Flow.upsert(batch.filter(lit(false)), sink, keys) == 0L)
+    assert(spark.read.parquet(sink).count() == wantRows.size)
+  }
+
+  test("an unpartitioned upsert primes the sink's schema: the next read runs no job and matches a fresh read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sink = tmpDir("flow_prime_sink") + "/sink"
+    val keys = Seq("host")
+    Flow.upsert(Seq(("a", 1.0)).toDF("host", "v"), sink, keys)
+    Flow.upsert(Seq(("a", 2.0, "n")).toDF("host", "v", "note"), sink, keys)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      org.apache.spark.ProbeBus.drain(spark.sparkContext)
+      val before = jobs.get
+      val primed = graft.model.Catalog.rawRead(spark, sink).schema
+      org.apache.spark.ProbeBus.drain(spark.sparkContext)
+      assert(jobs.get == before, "the primed read ran a schema job")
+      assert(primed == spark.read.option("mergeSchema", "true").parquet(sink).schema)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("swapIn replaces the destination and keeps it when the staged copy cannot move in") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("flow_swap")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dest = new Path(dir, "sink")
+    def write(p: Path, text: String): Unit = {
+      val out = fs.create(new Path(p, "f"), true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    def read(p: Path): String = {
+      val in = fs.open(new Path(p, "f"))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    write(dest, "old")
+    write(new Path(dir, "staging"), "new")
+    Flow.swapIn(fs, new Path(dir, "staging"), dest)
+    assert(read(dest) == "new" && !fs.exists(new Path(dir, "staging")) &&
+      !fs.exists(new Path(dir, "sink__old")))
+    // a staged copy that does not exist cannot be renamed in: the swap
+    // fails loudly and the destination keeps its current contents
+    val ex = intercept[java.io.IOException](Flow.swapIn(fs, new Path(dir, "missing"), dest))
+    assert(ex.getMessage.contains("failed to swap in"))
+    assert(read(dest) == "new" && !fs.exists(new Path(dir, "sink__old")))
+  }
+
   test("unpartitioned flows require the explicit opt-out") {
     val flow = FlowDef(name = "f_guard", sink = tmpDir("flow_guard"),
       keys = Seq("host"), transform = identity)

@@ -64,6 +64,114 @@ class GraftSessionSpec extends AnyFunSuite with SparkTest {
     assert(rows(0).getAs[Double]("total") == 5.0)
   }
 
+  // ---- batching-flow flushes: which windows re-evaluate ---------------
+
+  /** A per-minute flow over its own source `t`; rows are (host, minute,
+    * second, v) at 2024-01-01 00:<minute>:<second>. */
+  private def minuteFlow(t: String): Unit = {
+    g.sql(s"CREATE TABLE $t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    g.sql(s"""CREATE FLOW ${t}_flow SINK TO ${t}_sink AS
+              SELECT host, date_bin(INTERVAL '1 minute', ts) AS minute,
+              max(v) AS mx, count(*) AS n FROM $t GROUP BY host, minute""")
+  }
+  private def put(t: String, rows: (String, Int, Int, Double)*): Unit =
+    g.sql(s"INSERT INTO $t VALUES " + rows.map { case (h, m, sec, v) =>
+      f"(TIMESTAMP'2024-01-01 00:$m%02d:$sec%02d', '$h', $v)" }.mkString(", "))
+  private def flush(t: String): Long =
+    g.sql(s"ADMIN flush_flow('${t}_flow')").head().getString(0).toLong
+  /** (host, minute) -> (max, count) of the flow's sink */
+  private def sink(t: String): Map[(String, Long), (Double, Long)] =
+    g.sql(s"SELECT host, minute, mx, n FROM ${t}_sink").collect().map { r =>
+      val ms = r.get(1) match {
+        case i: java.time.Instant => i.toEpochMilli
+        case ts: java.sql.Timestamp => ts.getTime
+        case l: java.time.LocalDateTime => l.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      }
+      (r.getString(0), (ms - 1704067200000L) / 60000L) -> (r.getDouble(2), r.getLong(3))
+    }.toMap
+
+  test("flow flush: a pre-creation row in a dirty window is included, an untouched window is not evaluated") {
+    g.sql("CREATE TABLE fw1 (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    put("fw1", ("a", 0, 0, 5.0), ("a", 1, 0, 9.0))
+    g.sql("""CREATE FLOW fw1_flow SINK TO fw1_sink AS
+             SELECT host, date_bin(INTERVAL '1 minute', ts) AS minute,
+             max(v) AS mx, count(*) AS n FROM fw1 GROUP BY host, minute""")
+    put("fw1", ("a", 1, 30, 2.0))
+    flush("fw1")
+    // minute 1 is dirty and re-evaluates with its pre-creation row;
+    // minute 0 got no write since creation and stays out of the sink
+    assert(sink("fw1") == Map(("a", 1L) -> (9.0, 2L)))
+  }
+
+  test("flow flush: rewriting a pre-creation key re-dirties its window") {
+    g.sql("CREATE TABLE fw2 (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    put("fw2", ("a", 0, 0, 5.0), ("a", 0, 10, 1.0), ("a", 2, 0, 4.0))
+    g.sql("""CREATE FLOW fw2_flow SINK TO fw2_sink AS
+             SELECT host, date_bin(INTERVAL '1 minute', ts) AS minute,
+             max(v) AS mx, count(*) AS n FROM fw2 GROUP BY host, minute""")
+    put("fw2", ("a", 0, 10, 7.0)) // same key (host, ts), newer value
+    flush("fw2")
+    // the window sees the key's newest version once, not both versions
+    assert(sink("fw2") == Map(("a", 0L) -> (7.0, 2L)))
+    g.sql("ADMIN compact_table('fw2')")
+    put("fw2", ("a", 0, 0, 0.5))
+    flush("fw2")
+    assert(sink("fw2") == Map(("a", 0L) -> (7.0, 2L)))
+    put("fw2", ("a", 0, 10, 0.25))
+    flush("fw2")
+    assert(sink("fw2") == Map(("a", 0L) -> (0.5, 2L)))
+  }
+
+  test("flow flush after DELETE re-evaluates the window without the deleted rows") {
+    minuteFlow("fw3")
+    put("fw3", ("a", 0, 0, 1.0), ("a", 0, 20, 8.0), ("b", 0, 0, 3.0))
+    flush("fw3")
+    assert(sink("fw3") == Map(("a", 0L) -> (8.0, 2L), ("b", 0L) -> (3.0, 1L)))
+    g.sql("DELETE FROM fw3 WHERE host = 'a' AND v > 5")
+    flush("fw3")
+    assert(sink("fw3") == Map(("a", 0L) -> (1.0, 1L), ("b", 0L) -> (3.0, 1L)))
+  }
+
+  test("a second flow flush with no writes leaves the sink as it was") {
+    minuteFlow("fw4")
+    put("fw4", ("a", 0, 0, 1.0), ("a", 1, 0, 2.0), ("b", 1, 30, 6.0))
+    flush("fw4")
+    val first = sink("fw4")
+    assert(first.size == 3)
+    flush("fw4")
+    assert(sink("fw4") == first)
+  }
+
+  test("flush_flow returns the rows the flush wrote and primes the sink schema") {
+    minuteFlow("fw5")
+    assert(flush("fw5") == 0L) // nothing written since creation
+    put("fw5", ("a", 0, 0, 1.0), ("a", 1, 0, 2.0), ("b", 1, 30, 6.0))
+    assert(flush("fw5") == 3L)
+    put("fw5", ("c", 3, 0, 1.0))
+    g.sql("DELETE FROM fw5 WHERE host = 'b'")
+    // minutes 0, 1 and 3 re-evaluate and yield (a,0), (a,1), (c,3); the
+    // sink still holds (b,1), which no longer has source rows
+    assert(flush("fw5") == 3L)
+    // the cached schema the flush primed is what a fresh read finds
+    val path = g.catalog.spec("fw5_sink").path
+    assert(graft.model.Catalog.rawRead(spark, path).schema ==
+      spark.read.option("mergeSchema", "true").parquet(path).schema)
+  }
+
+  test("a keyless flow replaces its sink and reports the rows written") {
+    g.sql("CREATE TABLE fw6 (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)")
+    g.sql("CREATE FLOW fw6_flow SINK TO fw6_sink AS SELECT count(*) AS n, max(v) AS mx FROM fw6")
+    put("fw6", ("a", 0, 0, 1.0), ("b", 0, 0, 2.0))
+    assert(g.sql("ADMIN flush_flow('fw6_flow')").head().getString(0) == "1")
+    put("fw6", ("c", 0, 0, 4.0))
+    g.sql("ADMIN flush_flow('fw6_flow')")
+    val rows = g.sql("SELECT n, mx FROM fw6_sink").collect()
+    assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((3L, 4.0)))
+    val path = g.catalog.spec("fw6_sink").path
+    assert(graft.model.Catalog.rawRead(spark, path).schema ==
+      spark.read.option("mergeSchema", "true").parquet(path).schema)
+  }
+
   test("TQL EVAL over a registered metric table") {
     g.sql("""CREATE TABLE metric1 (ts TIMESTAMP TIME INDEX, host STRING PRIMARY KEY, v DOUBLE)""")
     g.sql("INSERT INTO metric1 VALUES (TIMESTAMP'1970-01-01 00:00:05', 'a', 3.0)")

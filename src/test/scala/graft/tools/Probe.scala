@@ -10,6 +10,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.ProbeBus
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.{Runtime, SparkEntry, Tables}
@@ -61,9 +62,19 @@ object Probe {
     val jobLines = new ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(this)
 
+    // SQL execution id -> its call site ("collect at X.scala:N"): names
+    // the statement step behind jobs that AQE submits from its own threads
+    private val execSites = new ConcurrentHashMap[String, String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId.toString, s.description): Unit
+      case _ =>
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       counts(0).incrementAndGet()
-      val site = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      val props = Option(e.properties)
+      val site = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+        .orElse(props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id))))
         .orElse(e.stageInfos.lastOption.flatMap(_.details.linesIterator
           .find(l => l.contains("graft") && !l.contains("Probe"))))
         .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("")
@@ -564,6 +575,48 @@ object Probe {
         println(f"[ingest] $mode rows_per_s=${n / m.last.wall}%.0f")
       }
       lines.unpersist()
+    }),
+    // ADMIN flush_flow of a per-minute max flow over a last_row cpu table,
+    // the shape of userbench's ingest_mixed: `hosts` hosts at 10 s, one
+    // compacted hour, then per cycle one INSERT of `minutes` new minutes
+    // plus rewrites of a tenth of the last hour's keys, and one measured
+    // flush; jobs=1 also prints each flush's Spark jobs
+    "flush" -> Family(Synthetic, (m, o, _) => {
+      val (hosts, cycles, minutes) = (long(o, "hosts", 20L), long(o, "cycles", 6L), long(o, "minutes", 15L))
+      val g = new graft.sql.GraftSession(m.spark, QueryDsl.tempDirCleanedOnExit("graft_flush"))
+      val t0 = 1704067200000L
+      def insert(rows: DataFrame): Unit = {
+        rows.createOrReplaceTempView("probe_cpu")
+        g.sql("INSERT INTO cpu (hostname, usage_user, ts) SELECT hostname, usage_user, ts FROM probe_cpu")
+          .collect(): Unit
+      }
+      // samples [from, until) of every host at version `ver`, kept where `keep` holds
+      def samples(from: Long, until: Long, ver: Long, keep: org.apache.spark.sql.Column = lit(true)) =
+        g.spark.range(from, until).crossJoin(g.spark.range(hosts).select(col("id").as("h")))
+          .filter(keep)
+          .select(concat(lit("host_"), col("h")).as("hostname"),
+            (pmod(xxhash64(col("h"), col("id"), lit(ver)), lit(10000L)) / 100.0).as("usage_user"),
+            (lit(t0) + col("id") * 10000L).as("ts"))
+      g.sql("CREATE TABLE cpu (hostname STRING PRIMARY KEY, usage_user DOUBLE, ts TIMESTAMP(3) TIME INDEX)")
+      var next = 360L
+      insert(samples(0L, next, 0L))
+      g.sql("ADMIN compact_table('cpu')").collect()
+      g.sql("""CREATE FLOW cpu_max_1m SINK TO cpu_1m AS
+               SELECT hostname, date_bin(INTERVAL '1 minute', ts) AS minute,
+               max(usage_user) AS max_user FROM cpu GROUP BY hostname, minute""")
+      val runs = (1L to cycles).map { c =>
+        val rewrites = samples(next - 360L, next, c,
+          pmod(xxhash64(col("h"), col("id"), lit(-c)), lit(10L)) === 0L)
+        insert(samples(next, next + minutes * 6L, 0L).unionByName(rewrites))
+        next += minutes * 6L
+        m.time(s"flush $c")(g.sql("ADMIN flush_flow('cpu_max_1m')").head().getString(0).toLong)
+        if (o.contains("jobs")) m.jobLines.forEach(l => println(l))
+        m.last
+      }
+      val warm = runs.drop(1).sortBy(_.wall)
+      if (warm.nonEmpty) println(f"[flush] warm median: wall=${warm(warm.size / 2).wall}%.2f s " +
+        s"jobs=${warm.map(_.jobs).sorted.apply(warm.size / 2)} sink=" +
+        g.sql("SELECT count(*) FROM cpu_1m").head().getLong(0))
     }),
     // fixture viability of the Hamming near-dup entry: every variant
     // of a class within ahash distance 3 of its base, every cross-class
